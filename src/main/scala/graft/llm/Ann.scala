@@ -186,46 +186,13 @@ object Ann {
     (0 until n).map(b => sig.bitwiseXOR(lit(1L << b)))
 
   /**
-   * Skew guard for SRP buckets: anisotropic embeddings pile up in a few
-   * signatures, and one giant bucket means one straggler task doing a
-   * quadratic chunk of the join. Buckets larger than `maxBucket` on the
-   * `buildId` side are split into ceil(n/maxBucket) salted sub-buckets
-   * (deterministic id-hash); the probe side REPLICATES across its bucket's
-   * sub-buckets, so the candidate pair set is EXACTLY preserved — this
-   * redistributes work, it never changes results. The per-bucket size map
-   * is at most 2^bits rows — broadcast. Returns both sides re-keyed to the
-   * salted bucket.
-   *
-   * Salted key layout: `bucket << 32 | salt`. Signatures use `bits` <= 31
-   * hyperplanes (callers pass 8), so the shifted bucket never collides with
-   * another bucket's salt range, and a salt needs __nsplit > 2^32 (i.e.
-   * > ~17e12 rows in ONE bucket at maxBucket=4096) before it could wrap —
-   * unreachable, so distinct (bucket, salt) pairs stay distinct keys and the
-   * "probe buckets are pairwise-distinct" no-dedupe arguments below hold.
-   */
-  private def saltBuckets(build: DataFrame, buildId: String,
-                          probe: DataFrame, maxBucket: Int): (DataFrame, DataFrame) = {
-    if (maxBucket <= 0) return (build, probe)
-    val splits = build.groupBy("bucket")
-      .agg(ceil(count(lit(1)) / lit(maxBucket.toDouble)).cast("int").as("__nsplit"))
-      .where(col("__nsplit") > 1)
-    val b = build.join(broadcast(splits), Seq("bucket"), "left")
-      .withColumn("bucket",
-        shiftleft(col("bucket"), 32) + when(col("__nsplit").isNull, lit(0))
-          .otherwise(pmod(xxhash64(col(buildId)), col("__nsplit").cast("long"))))
-      .drop("__nsplit")
-    val p = probe.join(broadcast(splits), Seq("bucket"), "left")
-      .withColumn("__salt",
-        explode(sequence(lit(0), coalesce(col("__nsplit"), lit(1)) - 1)))
-      .withColumn("bucket", shiftleft(col("bucket"), 32) + col("__salt"))
-      .drop("__nsplit", "__salt")
-    (b, p)
-  }
-
-  /**
    * Approximate top-k: bucket queries and corpus by SRP signature, compare
    * only within buckets (plus single-bit-flip probing for recall), exact
    * rerank inside the bucket. Scale path: one equi-join shuffle.
+   * Anisotropic embeddings pile up in a few signatures, so corpus buckets
+   * over `maxBucket` rows are salted ([[BucketJoin.salt]]: the corpus is
+   * the build side, the query probes replicate); `maxBucket` <= 0
+   * disables the split. Salting never changes the candidate set.
    *
    * Precondition: `idCol` is unique per row on BOTH sides. Candidates are
    * bag-semantic (no distinct — each join match scores and ranks once), so a
@@ -235,7 +202,7 @@ object Ann {
    */
   def lshTopK(queries: DataFrame, corpus: DataFrame, k: Int, bits: Int = 8,
               idCol: String = "vec_id", vecCol: String = "embedding",
-              maxBucket: Int = 4096): DataFrame = {
+              maxBucket: Int = BucketJoin.HotBucket): DataFrame = {
     val sess = queries.sparkSession
     val q = queries.select(col(idCol).as("q_id"), col(vecCol).as("q_vec"),
       nativeNorm(sess, col(vecCol)).as("q_norm"),
@@ -246,14 +213,16 @@ object Ann {
     val c0 = corpus.select(col(idCol).as("c_id"), col(vecCol).as("c_vec"),
       nativeNorm(sess, col(vecCol)).as("c_norm"),
       nativeSrpPacked(sess, col(vecCol), bits).as("bucket"))
-    val (c, probes) = saltBuckets(c0, "c_id", probes0, maxBucket)
+    val (c, probes, on) =
+      if (maxBucket <= 0) (c0, probes0, Seq("bucket"))
+      else BucketJoin.salt(c0, probes0, Seq("bucket"), "c_id", maxBucket)
     // norms hoisted to one UDF per ROW above: each candidate pair pays a
     // single dot-product call instead of dot + two norms
     // no pair dedupe needed: each corpus row lives in exactly ONE bucket and
-    // a query's probe buckets (sig + its 1-bit flips, sub-bucket replicas
-    // included) are pairwise-distinct values, so every (q,c) pair joins at
+    // a query's probe keys (sig + its 1-bit flips, each replicated to
+    // distinct salts) are pairwise-distinct, so every (q,c) pair joins at
     // most once — a distinct here would be a pure extra shuffle
-    val scored = c.join(probes.hint("shuffle_hash"), Seq("bucket"))
+    val scored = c.join(probes.hint("shuffle_hash"), on)
       .where(col("q_id") =!= col("c_id"))
       .withColumn("sim",
         nativeDot(sess, col("q_vec"), col("c_vec")) / (col("q_norm") * col("c_norm")))
@@ -545,12 +514,12 @@ object Ann {
   }
 
   /** Embedding near-duplicate pairs: cosine >= threshold via LSH buckets,
-    * with oversized buckets salted (see [[saltBuckets]]). Precondition:
+    * with oversized buckets salted as in [[lshTopK]]. Precondition:
     * unique `idCol` — output is bag-semantic (one row per join match), so
     * duplicate ids would emit duplicate pair rows (see [[lshTopK]]). */
   def cosineNearDupPairs(df: DataFrame, threshold: Double, bits: Int = 8,
                          idCol: String = "vec_id", vecCol: String = "embedding",
-                         maxBucket: Int = 4096): DataFrame = {
+                         maxBucket: Int = BucketJoin.HotBucket): DataFrame = {
     val sess = df.sparkSession
     val v = df.select(col(idCol).as("id"), col(vecCol).as("vec"),
       nativeNorm(sess, col(vecCol)).as("nrm"),
@@ -559,9 +528,11 @@ object Ann {
       explode(array(col("sig") +: flips(col("sig"), bits): _*)))
       .select(col("id"), col("vec"), col("nrm"), col("bucket"))
     val base0 = v.select(col("id"), col("vec"), col("nrm"), col("sig").as("bucket"))
-    val (base, probes) = saltBuckets(base0, "id", probes0, maxBucket)
+    val (base, probes, on) =
+      if (maxBucket <= 0) (base0, probes0, Seq("bucket"))
+      else BucketJoin.salt(base0, probes0, Seq("bucket"), "id", maxBucket)
     base.as("a").join(probes.as("b"),
-        col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
+        on.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _) && col("a.id") < col("b.id"))
       .withColumn("sim",
         nativeDot(sess, col("a.vec"), col("b.vec")) / (col("a.nrm") * col("b.nrm")))
       .where(col("sim") >= threshold)

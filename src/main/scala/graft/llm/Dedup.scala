@@ -139,62 +139,12 @@ object Dedup {
       xxhash64(slice(sig, b * rows + 1, lit(rows)), b))
   }
 
-  /** Sentinel default for `maxBucket` across the banded joins: probe the
-    * bucket histogram and salt ONLY when some bucket exceeds
-    * [[DefaultHotBucket]] (see [[adaptiveBanded]]). */
-  val AdaptiveMaxBucket: Int = -1
+  /** Default `maxBucket` of the banded joins: the adaptive policy of
+    * [[BucketJoin]]. */
+  val AdaptiveMaxBucket: Int = BucketJoin.Adaptive
 
-  /** Hot-bucket split threshold used by the adaptive default — same order
-    * as Multimodal.DefaultMaxBucket / Ann's LSH cap: bounds one task's
-    * pair work to ~cap^2 comparisons. */
-  val DefaultHotBucket: Int = 4096
-
-  /** Adaptive hot-bucket governance (r15, VERDICT r14 item 4 — the skew
-    * footgun was opt-in and a boilerplate-heavy 100 TB corpus with default
-    * args still went quadratic in one task). `maxBucket` semantics:
-    *   = 0 : never salt — forced symmetric self-join; both sides share the
-    *         exploded lineage so ReuseExchange computes the signature
-    *         stage once (the escape hatch when the caller KNOWS the key
-    *         distribution is clean);
-    *   > 0 : always salt at that cap (the r14 opt-in behavior, unchanged
-    *         and spec-pinned);
-    *   < 0 : DEFAULT — persist the COMPACT one-row-per-doc frame (id +
-    *         hash state, NOT the band-exploded rows — r15 persisted the
-    *         exploded frame, whose every row repeated the whole per-band
-    *         key array, a ~bands× cache footprint for nothing; ADVICE
-    *         r15), probe the exploded bucket histogram with one cheap
-    *         aggregate reading that cache, and take the salted plan only
-    *         when a bucket exceeds [[DefaultHotBucket]]; otherwise the
-    *         symmetric join re-explodes the same cached rows (no hash
-    *         recompute — the explode is column arithmetic). The persist
-    *         is released when the first consuming query completes
-    *         (CacheLifecycle).
-    * NOTE the adaptive default runs a small Spark job (the histogram
-    * probe) at DataFrame-CONSTRUCTION time and holds the compact frame
-    * cached (MEMORY_AND_DISK, ~(id + hash state) bytes/doc) until the
-    * first consuming query completes — the price of an OUTPUT-aware plan
-    * choice AQE cannot make: a 10k-row hot bucket is ~160 KB of shuffle
-    * input (invisible to input-size-based skew handling) but 5*10^7 join
-    * output rows in one task. Pass maxBucket = 0 or > 0 for a fully lazy
-    * frame. */
-  private def adaptiveBanded(compact: DataFrame, keys: Seq[String], maxBucket: Int)(
-      explodeFn: DataFrame => DataFrame)(
-      symmetric: DataFrame => DataFrame)(
-      salted: (DataFrame, Int) => DataFrame): DataFrame = {
-    if (maxBucket == 0) symmetric(explodeFn(compact))
-    else if (maxBucket > 0) salted(explodeFn(compact), maxBucket)
-    else {
-      val cached = compact.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val exploded = explodeFn(cached)
-      val hot = exploded.select(keys.map(col): _*)
-        .groupBy(keys.map(col): _*).agg(count(lit(1)).as("__n"))
-        .where(col("__n") > DefaultHotBucket)
-        .limit(1).count() > 0
-      val out = if (hot) salted(exploded, DefaultHotBucket) else symmetric(exploded)
-      graft.spark.CacheLifecycle.releaseAfterUse(Seq(cached), out)
-    }
-  }
+  /** The adaptive policy's hot-bucket cap ([[BucketJoin.HotBucket]]). */
+  val DefaultHotBucket: Int = BucketJoin.HotBucket
 
   /** Band-bucket self-join with FIRST-COLLISION REPORTING: each side keeps
     * its full per-band bucket array, and a candidate pair is emitted only
@@ -251,81 +201,36 @@ object Dedup {
     def membersOf(c: DataFrame, g: DataFrame): DataFrame =
       c.join(g.select(col("bks"), col("gid"), col("gsz")), Seq("bks"))
         .select(Seq(col("gid"), col("id"), col("gsz")) ++ payload: _*)
-    def run(groups: DataFrame, members: DataFrame): DataFrame = {
-      val reps = groups.select(col("gid").as("id"), col("bks"))
-      def explodeBands(s: DataFrame): DataFrame =
-        s.select(col("id"), col("bks"), posexplode(col("bks")).as(Seq("band", "bucket")))
-      val firstMatch = firstAgreeingBand(col("a.bks"), col("b.bks"), bands)
-      def symmetric(s: DataFrame): DataFrame =
-        // shuffle-hash (not broadcast) self-join: both sides shuffle on the
-        // same (band, bucket) key from the same lineage, so ReuseExchange
-        // (or the adaptive path's persist) computes the rep stage ONCE and
-        // reads it twice — at any scale
-        s.as("a").hint("shuffle_hash").join(s.as("b").hint("shuffle_hash"),
-            col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-              col("a.id") < col("b.id") && firstMatch === col("a.band") + 1)
-          .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      def salted(s: DataFrame, cap: Int): DataFrame = {
-        // HOT-BUCKET GOVERNANCE — the Multimodal.saltSelfJoin discipline:
-        // build side one salt replica per row, probe side replicated to all
-        // salts, so every within-bucket pair still meets exactly once while
-        // a degenerate bucket's quadratic work spreads over ceil(n/cap)
-        // tasks. Post-collapse a bucket holds one row per DISTINCT
-        // signature, so this now governs true many-distinct-signature hot
-        // buckets, not dup cliques.
-        val splits = s.groupBy(col("band"), col("bucket"))
-          .agg(ceil(count(lit(1)) / lit(cap.toDouble)).cast("long").as("__nsplit"))
-          .where(col("__nsplit") > 1)
-        val build = s.join(broadcast(splits), Seq("band", "bucket"), "left")
-          .withColumn("__salt", when(col("__nsplit").isNull, lit(0L))
-            .otherwise(pmod(xxhash64(col("id")), col("__nsplit"))))
-          .drop("__nsplit")
-        val probe = s.join(broadcast(splits), Seq("band", "bucket"), "left")
-          .withColumn("__salt",
-            explode(sequence(lit(0L), coalesce(col("__nsplit"), lit(1L)) - 1)))
-          .drop("__nsplit")
-        build.as("a").hint("shuffle_hash").join(probe.as("b").hint("shuffle_hash"),
-            col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-              col("a.__salt") === col("b.__salt") &&
-              col("a.id") < col("b.id") && firstMatch === col("a.band") + 1)
-          .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      }
-      val exploded = explodeBands(reps)
-      val gp =
-        if (maxBucket == 0) symmetric(exploded)
-        else if (maxBucket > 0) salted(exploded, maxBucket)
-        else {
-          // adaptive probe, now over REP rows: one row per distinct
-          // signature per band — both cheaper to histogram and the right
-          // grain to bound the rep join's per-task pair work
-          val hot = exploded.select(col("band"), col("bucket"))
-            .groupBy(col("band"), col("bucket")).agg(count(lit(1)).as("__n"))
-            .where(col("__n") > DefaultHotBucket)
-            .limit(1).count() > 0
-          if (hot) salted(exploded, DefaultHotBucket) else symmetric(exploded)
-        }
+    def run(groups: DataFrame, members: DataFrame, cached: Seq[DataFrame]): DataFrame = {
+      // the band join runs over REP rows: one row per distinct signature
+      // per band — both cheaper to histogram and the right grain to bound
+      // the join's per-task pair work. Post-collapse a hot bucket holds
+      // many DISTINCT signatures, not a dup clique.
+      val gp = BucketJoin.selfJoin(groups.select(col("gid").as("id"), col("bks")),
+        _.select(col("id"), col("bks"), posexplode(col("bks")).as(Seq("band", "bucket"))),
+        Seq("band", "bucket"), maxBucket, cached)(
+        firstAgreeingBand(col("a.bks"), col("b.bks"), bands) === col("a.band") + 1,
+        col("a.id").as("id_a"), col("b.id").as("id_b"))
       // maxBucket == 0 is the caller's "never salt" pin; keep the
       // expansion unsplit there too so the plan stays minimal
       expandGroupPairs(gp, members,
-        splitCap = if (maxBucket == 0) 0
-                   else if (maxBucket > 0) maxBucket else DefaultHotBucket,
-        tagged = tagged)
+        splitCap = if (maxBucket < 0) DefaultHotBucket else maxBucket, tagged = tagged)
     }
     if (maxBucket < 0) {
       // adaptive default: persist the compact frame (the signature UDF
       // runs once), the group frame (consumed by the rep join and the
       // member attach) AND the member frame (consumed by all four
       // expansion join sides — uncached it re-executed the bks join four
-      // times, r21 plan audit); all release when the first consuming
-      // query completes (CacheLifecycle)
+      // times, r21 plan audit); the band join releases all three when the
+      // first consuming query completes
       val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
       val cc = compact0.persist(lvl)
       val gg = groupsOf(cc).persist(lvl)
       val mm = membersOf(cc, gg).persist(lvl)
-      graft.spark.CacheLifecycle.releaseAfterUse(Seq(cc, gg, mm), run(gg, mm))
+      run(gg, mm, Seq(cc, gg, mm))
     } else {
       val gg = groupsOf(compact0)
-      run(gg, membersOf(compact0, gg))
+      run(gg, membersOf(compact0, gg), Nil)
     }
   }
 
@@ -391,19 +296,8 @@ object Dedup {
    * hashes / 8 bands (r=8), jaccard 0.9 pairs collide w.p. ~0.99 while
    * jaccard 0.5 pairs stay under ~3%.
    *
-   * Hot-bucket governance is ADAPTIVE BY DEFAULT (r15): a degenerate
-   * signature class — empty docs, templated boilerplate all hashing
-   * identically — makes its (band, bucket) self-join quadratic in ONE
-   * task; the default probes the bucket histogram and salts
-   * candidate-preservingly only when a bucket is actually hot (pair set
-   * unchanged, spec-pinned). See [[adaptiveBanded]] for the maxBucket
-   * semantics (0 = never salt, >0 = always salt at that cap).
-   *
-   * NOTE (adaptive default only): constructing the returned DataFrame
-   * runs ONE small Spark job — the bucket-histogram probe — and holds a
-   * compact (id, band-keys) frame cached MEMORY_AND_DISK (~(8 + 8*bands)
-   * bytes/doc) until the first query consuming the result completes.
-   * Pass maxBucket = 0 or > 0 for a fully lazy, cache-free frame.
+   * `maxBucket` is the hot-bucket policy of [[BucketJoin]]; a salted
+   * join emits the identical pair set (spec-pinned).
    */
   def minhashCandidatePairs(df: DataFrame, idCol: String, textCol: String,
                             numHashes: Int = 64, bands: Int = 8,
@@ -945,13 +839,7 @@ object Dedup {
     // n_tok - n + 1 digests per doc under the identical filter), so the
     // derived count — and therefore autoBloomBits and every downstream
     // bit — is bit-identical to the sizing job it replaces.
-    // escape hatch + in-process A/B lever; a malformed value falls back
-    // to the default, same contract as every other graft tuning conf
-    val singlePass =
-      try spark.conf.getOption("spark.graft.bloom.singlePass")
-        .forall(_.toBoolean)
-      catch { case scala.util.control.NonFatal(_) => true }
-    if (bits <= 0 && singlePass && graft.spark.FanOut.isSmall(ev)) {
+    if (bits <= 0 && graft.spark.FanOut.isSmall(ev)) {
       val packed = gramHashes(src, idCol, textCol, n)
         .select(col("gh").as[Array[Byte]]).rdd
         .mapPartitions { it =>
@@ -1070,58 +958,26 @@ object Dedup {
     * block — the classic block-permutation LSH). A pair sharing several
     * blocks is emitted only from the FIRST equal block — the first-
     * collision reporting trick again, derived from the two simhash values
-    * already carried, so no distinct over the pair set. */
-  /** Hot-bucket governance is ADAPTIVE BY DEFAULT (r15), same semantics
-    * as [[minhashCandidatePairs]]/[[adaptiveBanded]]: a degenerate
-    * simhash class — e.g. empty docs hashing to 0 — goes quadratic in
-    * one task; the default probes the (blk, bucket) histogram and salts
-    * candidate-preservingly only when a bucket is actually hot.
-    * NOTE (adaptive default only): construction runs one small Spark job
-    * (the probe) and holds the compact (id, sh) frame — 16 bytes/doc —
-    * cached until the first consuming query completes; pass
-    * maxBucket = 0 or > 0 for a fully lazy frame. */
+    * already carried, so no distinct over the pair set. `maxBucket` is
+    * the hot-bucket policy of [[BucketJoin]]. */
   def simhashCandidatePairs(df: DataFrame, idCol: String, textCol: String,
                             maxBucket: Int = AdaptiveMaxBucket): DataFrame = {
-    // compact one-row-per-doc frame (id, sh) — what the adaptive path
-    // caches (16 B/doc); the block explosion is re-derived per consumer
-    val sh = df.select(col(idCol).as("id"), simhash(col(textCol)).as("sh"))
-    def explodeBlocks(s: DataFrame): DataFrame = s.select(col("id"), col("sh"),
-        explode(array((0 until 4).map(b =>
-          struct(lit(b).as("blk"),
-            shiftright(col("sh"), b * 16).bitwiseAND(lit(0xffffL)).as("bucket"))): _*)).as("bk"))
-      .select(col("id"), col("sh"), col("bk.blk").as("blk"), col("bk.bucket").as("bucket"))
     def blockEq(b: Int): Column =
       shiftright(col("a.sh"), b * 16).bitwiseAND(lit(0xffffL)) ===
         shiftright(col("b.sh"), b * 16).bitwiseAND(lit(0xffffL))
     val firstBlk = when(blockEq(0), 0).when(blockEq(1), 1).when(blockEq(2), 2).otherwise(3)
-    def symmetric(s: DataFrame): DataFrame =
-      // same ReuseExchange/persist shape as the minhash self-join: the
-      // simhash stage computes once
-      s.as("a").hint("shuffle_hash").join(s.as("b").hint("shuffle_hash"),
-          col("a.blk") === col("b.blk") && col("a.bucket") === col("b.bucket") &&
-            col("a.id") < col("b.id") && col("a.blk") === firstBlk)
-        .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-          col("a.sh").as("sh_a"), col("b.sh").as("sh_b"))
-    def salted(s: DataFrame, cap: Int): DataFrame = {
-      val splits = s.groupBy(col("blk"), col("bucket"))
-        .agg(ceil(count(lit(1)) / lit(cap.toDouble)).cast("long").as("__nsplit"))
-        .where(col("__nsplit") > 1)
-      val build = s.join(broadcast(splits), Seq("blk", "bucket"), "left")
-        .withColumn("__salt", when(col("__nsplit").isNull, lit(0L))
-          .otherwise(pmod(xxhash64(col("id")), col("__nsplit"))))
-        .drop("__nsplit")
-      val probe = s.join(broadcast(splits), Seq("blk", "bucket"), "left")
-        .withColumn("__salt",
-          explode(sequence(lit(0L), coalesce(col("__nsplit"), lit(1L)) - 1)))
-        .drop("__nsplit")
-      build.as("a").hint("shuffle_hash").join(probe.as("b").hint("shuffle_hash"),
-          col("a.blk") === col("b.blk") && col("a.bucket") === col("b.bucket") &&
-            col("a.__salt") === col("b.__salt") &&
-            col("a.id") < col("b.id") && col("a.blk") === firstBlk)
-        .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-          col("a.sh").as("sh_a"), col("b.sh").as("sh_b"))
-    }
-    adaptiveBanded(sh, Seq("blk", "bucket"), maxBucket)(explodeBlocks)(symmetric)(salted)
+    // compact one-row-per-doc frame (id, sh), 16 B/doc; the block
+    // explosion is re-derived per consumer
+    val sh = df.select(col(idCol).as("id"), simhash(col(textCol)).as("sh"))
+    def blocks(s: DataFrame): DataFrame = s.select(col("id"), col("sh"),
+        explode(array((0 until 4).map(b =>
+          struct(lit(b).as("blk"),
+            shiftright(col("sh"), b * 16).bitwiseAND(lit(0xffffL)).as("bucket"))): _*)).as("bk"))
+      .select(col("id"), col("sh"), col("bk.blk").as("blk"), col("bk.bucket").as("bucket"))
+    BucketJoin.selfJoin(sh, blocks, Seq("blk", "bucket"), maxBucket)(
+      col("a.blk") === firstBlk,
+      col("a.id").as("id_a"), col("b.id").as("id_b"),
+      col("a.sh").as("sh_a"), col("b.sh").as("sh_b"))
   }
 
   /** Hamming distance between two 64-bit simhashes (built-in bit_count). */

@@ -222,75 +222,9 @@ object Multimodal {
       .toDF("media_id", "ahash")
   }
 
-  /**
-   * Candidate-preserving salt for a bucketed self-pair-join (the
-   * Ann.saltBuckets discipline applied to pair joins): per `keyCols`
-   * bucket holding more than `maxBucket` rows, the BUILD side takes ONE
-   * salt replica (`pmod(xxhash64(id), nsplit)`) while the PROBE side is
-   * replicated to ALL `nsplit` salts, so every within-bucket pair still
-   * meets exactly once (at the build row's salt) but the quadratic work
-   * of a degenerate bucket spreads over `nsplit` tasks instead of
-   * serializing into one. Buckets at or under the cap get salt 0 on both
-   * sides — the plan is unchanged for them. Join the returned frames on
-   * `keyCols :+ "__salt"`.
-   *
-   * `maxBucket` semantics — unified with [[graft.llm.Dedup]]'s adaptive
-   * discipline (r16; VERDICT r15 item 5 — the two modules made opposite
-   * default choices for the same tradeoff):
-   *   = 0 : never salt — both sides share the identical lineage, so the
-   *         symmetric self-join's exchange computes once (ReuseExchange);
-   *   > 0 : always salt at that cap (the r14 opt-in behavior, unchanged);
-   *   < 0 : DEFAULT ([[AdaptiveMaxBucket]]) — persist the exploded key
-   *         frame once (slim: id + key + hash columns, no per-row
-   *         arrays; the lineage above it runs the decode-heavy media
-   *         hash UDFs, which is why the probe reads a cache here instead
-   *         of recomputing like the text side), probe the bucket
-   *         histogram, and take the salted plan only when a bucket
-   *         exceeds [[DefaultMaxBucket]] — a cold corpus keeps the
-   *         unsalted symmetric plan.
-   * NOTE the adaptive default runs a small Spark job (the probe) at
-   * DataFrame-construction time; the cache is released when the first
-   * consuming query completes (CacheLifecycle).
-   */
-  private def saltSelfJoin(rows: DataFrame, idCol: String, keyCols: Seq[String],
-                           maxBucket: Int): (DataFrame, DataFrame, Seq[DataFrame]) = {
-    if (maxBucket == 0) return (rows.withColumn("__salt", lit(0L)),
-      rows.withColumn("__salt", lit(0L)), Nil)
-    // ADVICE r14: the consumers below (probe/splits aggregation + build +
-    // probe side) would each re-evaluate `rows`' lineage — for the media
-    // joins that lineage runs the decode-heavy hash UDFs, ~3x per call,
-    // and the asymmetric sides forfeit the ReuseExchange the symmetric
-    // self-join had. Persist once; the caller arms
-    // CacheLifecycle.releaseAfterUse on the consuming join so the cache
-    // dies with the first query.
-    val cached = rows.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cap = if (maxBucket < 0) DefaultMaxBucket else maxBucket
-    if (maxBucket < 0) {
-      val hot = cached.groupBy(keyCols.map(col): _*)
-        .agg(count(lit(1)).as("__n")).where(col("__n") > cap)
-        .limit(1).count() > 0
-      if (!hot) return (cached.withColumn("__salt", lit(0L)),
-        cached.withColumn("__salt", lit(0L)), Seq(cached))
-    }
-    val splits = cached.groupBy(keyCols.map(col): _*)
-      .agg(ceil(count(lit(1)) / lit(cap.toDouble)).cast("long").as("__nsplit"))
-      .where(col("__nsplit") > 1)
-    val build = cached.join(broadcast(splits), keyCols, "left")
-      .withColumn("__salt", when(col("__nsplit").isNull, lit(0L))
-        .otherwise(pmod(xxhash64(col(idCol)), col("__nsplit"))))
-      .drop("__nsplit")
-    val probe = cached.join(broadcast(splits), keyCols, "left")
-      .withColumn("__salt",
-        explode(sequence(lit(0L), coalesce(col("__nsplit"), lit(1L)) - 1)))
-      .drop("__nsplit")
-    (build, probe, Seq(cached))
-  }
-
-  /** Sentinel default for `maxBucket` across the media near-dup joins:
-    * probe the bucket histogram and salt ONLY when some bucket exceeds
-    * [[DefaultMaxBucket]] (see [[saltSelfJoin]]) — same adaptive default
-    * as [[graft.llm.Dedup.AdaptiveMaxBucket]]. */
-  val AdaptiveMaxBucket: Int = -1
+  /** Default `maxBucket` of the media near-dup joins: the adaptive
+    * policy of [[BucketJoin]]. */
+  val AdaptiveMaxBucket: Int = BucketJoin.Adaptive
 
   /** Diagnostic for the banded joins' hot-bucket governance: one row per
     * OVERSIZED (blk, bucket) — its population and the salt fan-out the
@@ -298,22 +232,14 @@ object Multimodal {
     * near-dup pass to see exactly which degenerate hash values (uniform
     * images, steady tones, black frames) are being split. */
   def hotBucketStats(hashes: DataFrame, maxHamming: Int,
-                     maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    val nBlocks = maxHamming + 1
-    val width = 64 / nBlocks
-    hashes.select(col("id"),
-        explode(array((0 until nBlocks).map(i =>
-          struct(lit(i).as("blk"), blockVal(col("h"), i, width, nBlocks).as("bucket"))): _*)).as("bk"))
-      .select(col("bk.blk").as("blk"), col("bk.bucket").as("bucket"))
+                     maxBucket: Int = DefaultMaxBucket): DataFrame =
+    hashBlocks(hashes, maxHamming + 1)
       .groupBy("blk", "bucket").agg(count(lit(1)).as("n"))
       .where(col("n") > maxBucket)
-      .withColumn("nsplit", ceil(col("n") / lit(maxBucket.toDouble)).cast("long"))
-  }
+      .withColumn("nsplit", BucketJoin.nsplit(col("n"), maxBucket))
 
-  /** Default hot-bucket split threshold for the banded similarity joins
-    * (same order as Ann's LSH cap: bounds one task's pair work to
-    * ~maxBucket^2/nsplit comparisons). */
-  val DefaultMaxBucket: Int = 4096
+  /** The adaptive policy's hot-bucket cap ([[BucketJoin.HotBucket]]). */
+  val DefaultMaxBucket: Int = BucketJoin.HotBucket
 
   // static per-block shifts (shift amounts must be literals in Spark)
   private def blockVal(h: Column, i: Int, width: Int, nBlocks: Int): Column = {
@@ -336,10 +262,8 @@ object Multimodal {
    * Hot-bucket governance: a degenerate hash value — the aHash of a
    * uniform image, the all-zero envelope of a steady tone — puts its
    * whole equivalence class into one (blk, bucket), where the self-join
-   * is quadratic in the class. Buckets over `maxBucket` rows are salted
-   * candidate-preservingly ([[saltSelfJoin]]): every qualifying pair is
-   * still emitted exactly once, but the class's work spreads over
-   * ceil(n/maxBucket) tasks. [[hotBucketStats]] reports what gets split.
+   * is quadratic in the class. `maxBucket` is the [[BucketJoin]] policy;
+   * [[hotBucketStats]] reports what gets split.
    */
   private[llm] def hamming64Pairs(hashes: DataFrame, maxHamming: Int,
                                   maxBucket: Int = AdaptiveMaxBucket): DataFrame = {
@@ -347,24 +271,27 @@ object Multimodal {
       "hamming64Pairs: maxHamming must be in [0, 15] (block count <= 16)")
     val nBlocks = maxHamming + 1
     val width = 64 / nBlocks // uneven tail bits join the last block
-    val blocks = hashes.select(col("id"), col("h"),
-        explode(array((0 until nBlocks).map(i =>
-          struct(lit(i).as("blk"), blockVal(col("h"), i, width, nBlocks).as("bucket"))): _*)).as("bk"))
-      .select(col("id"), col("h"), col("bk.blk").as("blk"), col("bk.bucket").as("bucket"))
     def blockEq(i: Int): Column =
       blockVal(col("a.h"), i, width, nBlocks) === blockVal(col("b.h"), i, width, nBlocks)
     val firstBlk = (0 until nBlocks - 1).foldRight(lit(nBlocks - 1): Column) {
       (i, acc) => when(blockEq(i), lit(i)).otherwise(acc)
     }
-    val (build, probe, cached) = saltSelfJoin(blocks, "id", Seq("blk", "bucket"), maxBucket)
-    val joined = build.as("a").hint("shuffle_hash").join(probe.as("b").hint("shuffle_hash"),
-        col("a.blk") === col("b.blk") && col("a.bucket") === col("b.bucket") &&
-          col("a.__salt") === col("b.__salt") &&
-          col("a.id") < col("b.id") && col("a.blk") === firstBlk)
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
+    BucketJoin.selfJoin(hashes.select(col("id"), col("h")), hashBlocks(_, nBlocks),
+        Seq("blk", "bucket"), maxBucket)(
+        col("a.blk") === firstBlk,
+        col("a.id").as("id_a"), col("b.id").as("id_b"),
         bit_count(col("a.h").bitwiseXOR(col("b.h"))).cast("int").as("hamming"))
       .where(col("hamming") <= maxHamming)
-    graft.spark.CacheLifecycle.releaseAfterUse(cached, joined)
+  }
+
+  /** One row per (id, hash block): (id, h, blk, bucket) over `nBlocks`
+    * blocks of the 64-bit hash `h`, the tail bits joining the last. */
+  private def hashBlocks(hashes: DataFrame, nBlocks: Int): DataFrame = {
+    val width = 64 / nBlocks
+    hashes.select(col("id"), col("h"),
+        explode(array((0 until nBlocks).map(i =>
+          struct(lit(i).as("blk"), blockVal(col("h"), i, width, nBlocks).as("bucket"))): _*)).as("bk"))
+      .select(col("id"), col("h"), col("bk.blk").as("blk"), col("bk.bucket").as("bucket"))
   }
 
   /** Image NEAR-DEDUP via banded aHash — the multimodal twin of SimHash
@@ -508,11 +435,9 @@ object Multimodal {
    *
    * Hot-bucket governance: a frame hash shared by a huge population
    * (black frames, title cards, station idents) makes the equi-join
-   * quadratic in that population. Frame hashes with more than
-   * `maxBucket` carriers are salted candidate-preservingly
-   * ([[saltSelfJoin]]) — intersection counts are exact (each
-   * (pair, frame) match still meets exactly once) while a degenerate
-   * frame's work spreads over ceil(n/maxBucket) tasks.
+   * quadratic in that population; `maxBucket` is the [[BucketJoin]]
+   * policy, and salting keeps intersection counts exact (each
+   * (pair, frame) match still meets exactly once).
    */
   def videoNearDupPairs(media: DataFrame, minJaccardPermille: Int = 500,
                         maxBucket: Int = AdaptiveMaxBucket): DataFrame =
@@ -529,13 +454,11 @@ object Multimodal {
                                         maxBucket: Int = AdaptiveMaxBucket): DataFrame = {
     require(minJaccardPermille >= 0 && minJaccardPermille <= 1000,
       "videoNearDupPairs: minJaccardPermille must be in [0, 1000]")
-    val ex = fp.select(col("media_id").as("id"), col("nf"),
-      explode(col("frame_hashes")).as("fh"))
-    val (build, probe, cached) = saltSelfJoin(ex, "id", Seq("fh"), maxBucket)
-    val a = build.select(col("id").as("id_a"), col("nf").as("na"), col("fh"), col("__salt"))
-    val b = probe.select(col("id").as("id_b"), col("nf").as("nb"), col("fh"), col("__salt"))
-    val joined = a.hint("shuffle_hash").join(b.hint("shuffle_hash"), Seq("fh", "__salt"))
-      .where(col("id_a") < col("id_b"))
+    BucketJoin.selfJoin(fp.select(col("media_id").as("id"), col("nf"), col("frame_hashes")),
+        _.select(col("id"), col("nf"), explode(col("frame_hashes")).as("fh")),
+        Seq("fh"), maxBucket)(
+        lit(true), col("a.id").as("id_a"), col("b.id").as("id_b"),
+        col("a.nf").as("na"), col("b.nf").as("nb"))
       .groupBy("id_a", "id_b", "na", "nb")
       .agg(count(lit(1)).as("inter"))
       .withColumn("jaccard_permille",
@@ -543,7 +466,6 @@ object Multimodal {
       .where(col("jaccard_permille") >= minJaccardPermille)
       .select(col("id_a"), col("id_b"), col("inter").cast("long").as("n_shared"),
         col("jaccard_permille"))
-    graft.spark.CacheLifecycle.releaseAfterUse(cached, joined)
   }
 
   /** Resample a decoded image to the target size (nearest-neighbor via
