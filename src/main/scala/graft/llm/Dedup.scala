@@ -962,19 +962,19 @@ object Dedup {
     * the hot-bucket policy of [[BucketJoin]]. */
   def simhashCandidatePairs(df: DataFrame, idCol: String, textCol: String,
                             maxBucket: Int = AdaptiveMaxBucket): DataFrame = {
-    def blockEq(b: Int): Column =
-      shiftright(col("a.sh"), b * 16).bitwiseAND(lit(0xffffL)) ===
-        shiftright(col("b.sh"), b * 16).bitwiseAND(lit(0xffffL))
-    val firstBlk = when(blockEq(0), 0).when(blockEq(1), 1).when(blockEq(2), 2).otherwise(3)
-    // compact one-row-per-doc frame (id, sh), 16 B/doc; the block
-    // explosion is re-derived per consumer
+    // compact one-row-per-doc frame (id, sh) — what the adaptive path
+    // caches (16 B/doc); the block explosion is re-derived per consumer
     val sh = df.select(col(idCol).as("id"), simhash(col(textCol)).as("sh"))
-    def blocks(s: DataFrame): DataFrame = s.select(col("id"), col("sh"),
+    def explodeBlocks(s: DataFrame): DataFrame = s.select(col("id"), col("sh"),
         explode(array((0 until 4).map(b =>
           struct(lit(b).as("blk"),
             shiftright(col("sh"), b * 16).bitwiseAND(lit(0xffffL)).as("bucket"))): _*)).as("bk"))
       .select(col("id"), col("sh"), col("bk.blk").as("blk"), col("bk.bucket").as("bucket"))
-    BucketJoin.selfJoin(sh, blocks, Seq("blk", "bucket"), maxBucket)(
+    def blockEq(b: Int): Column =
+      shiftright(col("a.sh"), b * 16).bitwiseAND(lit(0xffffL)) ===
+        shiftright(col("b.sh"), b * 16).bitwiseAND(lit(0xffffL))
+    val firstBlk = when(blockEq(0), 0).when(blockEq(1), 1).when(blockEq(2), 2).otherwise(3)
+    BucketJoin.selfJoin(sh, explodeBlocks, Seq("blk", "bucket"), maxBucket)(
       col("a.blk") === firstBlk,
       col("a.id").as("id_a"), col("b.id").as("id_b"),
       col("a.sh").as("sh_a"), col("b.sh").as("sh_b"))
