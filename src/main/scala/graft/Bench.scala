@@ -717,7 +717,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val benchStart = System.nanoTime()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
     val spark = buildSession(cpus)
     spark.sparkContext.setLogLevel("WARN")
 
@@ -745,13 +745,13 @@ object Bench {
     // cancelled row, heavy-child crash, even a parent hard-kill — leaves a
     // parseable partial window on disk. A partial stdout record also prints
     // per section.
-    val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/bench_full.json")
-    val slimPath = sys.env.getOrElse("SPARK_GRAFT_SLIM_OUT", "/root/repo/bench_slim.json")
+    val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_full.json")
+    val slimPath = sys.env.getOrElse("SPARK_GRAFT_SLIM_OUT", "bench_slim.json")
     var smallSec: Option[SectionOut] = None
     var smallCalib = 0.0
-    val bigDir = sys.env.getOrElse("SPARK_GRAFT_BIG_DIR", "/root/repo/bigdata/sf1")
-    val hugeDir = sys.env.getOrElse("SPARK_GRAFT_HUGE_DIR", "/root/repo/bigdata/sf3")
-    val megaDir = sys.env.getOrElse("SPARK_GRAFT_MEGA_DIR", "/root/repo/bigdata/sf10")
+    val bigDir = sys.env.getOrElse("SPARK_GRAFT_BIG_DIR", "bigdata/sf1")
+    val hugeDir = sys.env.getOrElse("SPARK_GRAFT_HUGE_DIR", "bigdata/sf3")
+    val megaDir = sys.env.getOrElse("SPARK_GRAFT_MEGA_DIR", "bigdata/sf10")
     var bigSec: Option[SectionOut] = None
     var bigWarmIo = 0.0; var bigCalib = 0.0
     var hugeLightSec: Option[SectionOut] = None; var hugeHeavySec: Option[SectionOut] = None
@@ -940,7 +940,7 @@ object Bench {
     // custom SPARK_GRAFT_BIG_DIR must state its scale via
     // SPARK_GRAFT_BIG_COPIES or pre-exist, so a missing 30x dir is never
     // silently refilled with 10x data and mislabeled.
-    val defaultBigDir = "/root/repo/bigdata/sf1"
+    val defaultBigDir = "bigdata/sf1"
     if (!new java.io.File(s"$bigDir/lineitem.parquet").exists()) {
       val copies = sys.env.get("SPARK_GRAFT_BIG_COPIES").map(_.toInt)
       copies match {
@@ -1170,7 +1170,7 @@ object BenchHeavyChild {
   def main(args: Array[String]): Unit = {
     val outPath = args(0); val dir = args(1)
     val sparkReps = args(2).toInt
-    val cpus = args.lift(3).getOrElse("32")
+    val cpus = args.lift(3).getOrElse(Runtime.getRuntime.availableProcessors.toString)
     val rows = args.lift(4).map(_.split(",").toSeq.filter(_.nonEmpty))
       .getOrElse(Bench.heavyNames)
     val spark = Bench.buildSession(cpus)

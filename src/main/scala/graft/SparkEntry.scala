@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.spark.{Queries, S2Data, S2Functions, S2Join}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
+/** Query entry-point contract — see SURVEY.md §7. */
 object SparkEntry {
 
   /** Flagship query (reference README.md:14-19): countries x cities spatial

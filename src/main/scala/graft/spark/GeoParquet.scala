@@ -49,13 +49,14 @@ object GeoParquet {
   /** Recursively list the data part files under `p` (descends into
     * partitionBy subdirectories; skips _SUCCESS/_metadata and hidden
     * files). */
-  private def partFiles(fs: org.apache.hadoop.fs.FileSystem, p: Path): Array[Path] = {
+  private[spark] def partFiles(fs: org.apache.hadoop.fs.FileSystem,
+                              p: Path): Array[org.apache.hadoop.fs.FileStatus] = {
     val st = fs.getFileStatus(p)
     if (st.isDirectory)
       fs.listStatus(p).filter(s => !s.getPath.getName.startsWith("_") &&
           !s.getPath.getName.startsWith("."))
         .flatMap(s => partFiles(fs, s.getPath))
-    else if (p.getName.endsWith(".parquet")) Array(p)
+    else if (p.getName.endsWith(".parquet")) Array(st)
     else Array.empty
   }
 
@@ -67,7 +68,7 @@ object GeoParquet {
     val root = new Path(dir)
     val fs = root.getFileSystem(conf)
     val parts =
-      if (fs.getFileStatus(root).isDirectory) partFiles(fs, root)
+      if (fs.getFileStatus(root).isDirectory) partFiles(fs, root).map(_.getPath)
       else Array(root)
     val geoJson = geoMetadataJson(geometryColumn)
     parts.foreach { part =>
@@ -151,7 +152,7 @@ object GeoParquet {
     val root = new Path(dir)
     val fs = root.getFileSystem(conf)
     val part =
-      if (fs.getFileStatus(root).isDirectory) partFiles(fs, root).headOption
+      if (fs.getFileStatus(root).isDirectory) partFiles(fs, root).headOption.map(_.getPath)
       else Some(root)
     part.flatMap { p =>
       val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))

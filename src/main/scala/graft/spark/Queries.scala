@@ -1,7 +1,11 @@
 package graft.spark
 
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, DataType, LongType, StringType}
 
 import graft.llm.{Ann, Boilerplate, Bpe, Classifier, Dedup, Multimodal, Sampling, TextAnalysis}
 import S2Functions.S2
@@ -85,7 +89,7 @@ object Queries {
       case Some((key, n, sorted)) =>
         val tbl = bucketTableName(t, dir, key, n)
         if (!s.catalog.tableExists(tbl)) {
-          val path = s"$dir/$t.parquet"
+          val path = qualifiedPath(s, s"$dir/$t.parquet")
           val schema = s.read.parquet(path).schema.toDDL
           // SORTED BY only when the writer recorded the sortBy path —
           // see bucketMarker's scaladoc (ADVICE r17)
@@ -96,6 +100,15 @@ object Queries {
         tbl
       case None => s"parquet.`$dir/$t.parquet`"
     }
+
+  /** `p` made absolute against the working directory, scheme kept. A
+    * catalog table's LOCATION (or saveAsTable `path`) given relative would
+    * resolve against the warehouse dir instead of the working directory:
+    * the table would scan empty, and a bucketed write would land there. */
+  private[graft] def qualifiedPath(s: SparkSession, p: String): String = {
+    val path = new Path(p)
+    path.getFileSystem(s.sessionState.newHadoopConf()).makeQualified(path).toString
+  }
 
   def prep(s: SparkSession, dir: String): Unit = synchronized {
     if (preppedFor == (s, dir)) return
@@ -3377,6 +3390,73 @@ object Queries {
 
   // ================================================== relational / bench
 
+  /** SIZE GATES. The seven relational dispatchers (q1, q3, q4, q5, q12,
+    * funnel, hourly) pick a shape from the ROW COUNT of one input table,
+    * read from its parquet footers by [[footerRows]] — codec-insensitive,
+    * unlike on-disk bytes — and every forced-broadcast shape runs under the
+    * one rule in [[fitsBroadcast]]. Where a dispatcher has a bucketed branch
+    * the `_graft_buckets.json` layout marker is checked first. Crossovers at
+    * the default 10 MB autoBroadcastJoinThreshold, with the SF each sits at
+    * (this generator writes 6M lineitem, 1.5M orders, 1M events and 10K
+    * supplier rows per SF):
+    * {{{
+    * dispatcher  table     small shape (rows <= crossover)  large shape       crossover rows  ~SF
+    * q1          lineitem  flat single-level sum            salted two-level  4,294,967,296   716
+    * q3          orders    both dims broadcast (24 B/row)   filter-first      873,813         0.58
+    * q3          orders    filter-first (1/5 keys, 16 B)    pre-agg-first     6,553,600       4.4
+    * q4          orders    broadcast orders (36 B/row)      IN (DISTINCT)     582,542         0.39
+    * q12         orders    narrow broadcast (25 B/row)      unhinted join     838,860         0.56
+    * q5          supplier  broadcast dim (56 B/row)         unhinted pre-agg  374,491         37
+    * funnel      events    array fold                       staged joins      3,300,000       3.3
+    * hourly      events    COALESCE(1) one stage (< rows)   two-level         800,000         0.8
+    * }}}
+    * The `*_bcast`/`*_narrow` oracle rows run their forced shape under the
+    * same rule ([[guardedBcast]]). */
+  private def dataFiles(dir: String, table: String): Array[FileStatus] = {
+    val root = new Path(s"$dir/$table.parquet")
+    val fs = root.getFileSystem(hadoopConf)
+    // GeoParquet's listing rule: `_`/`.` names skipped, partition
+    // subdirectories descended; an absent table has no files
+    if (fs.exists(root)) GeoParquet.partFiles(fs, root) else Array.empty
+  }
+  private lazy val hadoopConf = new org.apache.hadoop.conf.Configuration()
+  /** (path, total length, latest mtime) of a table's data files: changes
+    * whenever the table at the path is regenerated. */
+  private def filesKey(dir: String, table: String, files: Array[FileStatus]) =
+    (s"$dir/$table.parquet", files.map(_.getLen).sum,
+      files.map(_.getModificationTime).foldLeft(0L)(math.max))
+  // Keyed by the files, NOT by SparkSession (ADVICE r14: a session key pins
+  // session references for the JVM lifetime and returns stale counts when
+  // the same path is regenerated in-session, flipping a shape choice).
+  private val footerRowsCache =
+    scala.collection.concurrent.TrieMap.empty[(String, Long, Long), Long]
+  /** Row count of `table` under `dir`: `getRecordCount` summed over the
+    * parquet footers of its data files (`_`/`.`-prefixed names skipped),
+    * read in-process without a Spark job. Cached, so a rep pays only for
+    * the directory listing. */
+  private[spark] def footerRows(dir: String, table: String): Long = {
+    val files = dataFiles(dir, table)
+    footerRowsCache.getOrElseUpdate(filesKey(dir, table, files), {
+      files.map { f =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, hadoopConf))
+        try reader.getRecordCount finally reader.close()
+      }.sum
+    })
+  }
+  /** THE broadcast rule: a forced-broadcast shape runs only while its build
+    * fits twice the broadcast budget, `rows × width ≤ 2 · max(abt, 10 MB)`
+    * with `abt` the session's autoBroadcastJoinThreshold (≤ 0 disables
+    * broadcasts, so no forced shape runs; the 2x slack covers the hashed
+    * in-memory form). `width` is the row width Catalyst's getSizePerRow
+    * uses: 8 bytes plus each carried column's defaultSize; `rowShare` scales
+    * the rows when the build is a filtered fraction of the table. */
+  private def fitsBroadcast(s: SparkSession, dir: String, table: String,
+                            cols: Seq[DataType], rowShare: Double = 1.0): Boolean = {
+    val abt = s.sessionState.conf.autoBroadcastJoinThreshold
+    abt > 0 && footerRows(dir, table) * rowShare * (8 + cols.map(_.defaultSize).sum) <=
+      2.0 * math.max(abt, 10L * 1024 * 1024)
+  }
+
   // TPC-H money sums run as SCALED-INTEGER arithmetic: a 2-decimal price
   // is exact cents (BIGINT) and a discount an exact percent, so the
   // per-row work is one codegen long multiply-add — what DuckDB's decimal
@@ -3426,11 +3506,10 @@ object Queries {
   // schema-bounded groups. EXACTNESS BOUND, no distribution assumption:
   // the largest per-row term is disc_c <= round(price*100) * 100 ~ 1e9,
   // so a single BIGINT group sum overflows 2^63 only past ~9.2e9 rows IN
-  // ONE GROUP — at lineitem's ~18 B/row parquet density that is a ~160 GB
-  // single-group file. The dispatcher flips to the salted two-level shape
-  // two orders of magnitude before that; below it the salt's 9x1024
-  // partial groups + second exchange were pure stage floor (sf0.1 A/B:
-  // 0.167 -> ~0.12 s; the sf10 section also keeps flat at 1.1 GB).
+  // ONE GROUP. A lineitem of at most 2^32 (~4.3e9) rows can hold no such
+  // group, so up to there the flat form is provably exact; below it the
+  // salt's 9x1024 partial groups + second exchange were pure stage floor
+  // (sf0.1 A/B: 0.167 -> ~0.12 s; the sf10 section also keeps flat).
   private[spark] val q1FlatSql =
     """SELECT l_returnflag, l_linestatus,
       | CAST(CAST(CAST(sum(CAST(round(l_quantity * 100) AS BIGINT)) AS DECIMAL(38,0)) / 100 AS DECIMAL(18,2)) AS DOUBLE) AS sum_qty,
@@ -3441,15 +3520,14 @@ object Queries {
       |FROM lineitem
       |GROUP BY l_returnflag, l_linestatus
       |ORDER BY l_returnflag, l_linestatus LIMIT 1000""".stripMargin
-  /** SIZE-ADAPTIVE q1 (r18, same discipline as q5): flat single-level agg
-    * until the per-group BIGINT-cents bound could plausibly bind (64 GB
-    * lineitem — 2.5 orders of magnitude of margin against the ~160 GB
-    * single-group overflow point), salted two-level beyond. Both shapes
-    * stay registered against the same oracle. */
+  /** SIZE-ADAPTIVE q1 (r18): flat single-level agg while lineitem has at
+    * most [[Q1FlatMaxRows]] rows (the exactness bound above), salted
+    * two-level beyond. Both shapes stay registered against the same
+    * oracle. */
+  private val Q1FlatMaxRows = 1L << 32
   private val qTpchQ1: Q = (s, dir) => {
     prep(s, dir)
-    val (len, _) = dirFingerprint(s"$dir/lineitem.parquet")
-    s.sql(if (len > 64L * 1024 * 1024 * 1024) q1SaltedSql else q1FlatSql)
+    s.sql(if (footerRows(dir, "lineitem") > Q1FlatMaxRows) q1SaltedSql else q1FlatSql)
   }
   private val oTpchQ1 =
     """SELECT l_returnflag, l_linestatus,
@@ -3497,10 +3575,9 @@ object Queries {
   // join; there PRE-AGG-FIRST wins: aggregate lineitem per orderkey (the
   // group key IS the join key, so map-side combine collapses the exchange
   // to order grain, ~4x fewer rows than raw) and join the key set after.
-  // The choice keys off the PHYSICAL orders file size (a bare relation's
-  // byte stats are the FileIndex total — reliable, unlike the join-side
+  // The choice keys off the orders footer row count (not the join-side
   // product stats an r5 optimizer rule tripped over): filter-first while
-  // the ~1/5 key set plausibly broadcasts, pre-agg-first beyond. Both
+  // the ~1/5 key set fits the broadcast rule, pre-agg-first beyond. Both
   // shapes use the same BIGINT cents math (one order <= 7 lineitems, far
   // from 2^63, no salt) and produce identical rows.
   private[spark] val q3FilterFirst =
@@ -3530,28 +3607,13 @@ object Queries {
       | CAST(CAST(CAST(r.cents AS DECIMAL(38,0)) / 10000 AS DECIMAL(18,4)) AS DOUBLE) AS revenue
       |FROM lrev r JOIN bo ON r.l_orderkey = bo.o_orderkey
       |ORDER BY revenue DESC, o_orderkey LIMIT 10""".stripMargin
-  // q3's shape choice needs the physical orders file size; the listing +
-  // footer pass is driver-side and identical per dataset, so cache it —
-  // re-deriving it per bench rep was ~10% of the whole sf0.1 row. Keyed
-  // by (dir, total file length, latest mtime) — NOT by SparkSession
-  // (ADVICE r14: a session key pins session references for the JVM
-  // lifetime and returns stale sizes when the same path is regenerated
-  // in-session, flipping q3 to the wrong plan shape).
-  private val ordersBytesCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Long, Long), BigInt]
-  private def dirFingerprint(path: String): (Long, Long) = {
-    val files = Option(new java.io.File(path).listFiles()).getOrElse(Array.empty)
-      .filter(_.isFile)
-    if (files.isEmpty) {
-      val f = new java.io.File(path); (f.length, f.lastModified)
-    } else (files.map(_.length).sum, files.map(_.lastModified).max)
-  }
   /** SMALL-FLAT q3 (r17): both dims broadcast, so their builds
     * materialize CONCURRENTLY and the whole query is one lineitem stage
     * + TakeOrdered — the sequential customer-then-bo broadcast chain of
     * filter-first was the dominant sf0.1 cost (A/B: 0.75 -> 0.58 s).
-    * Forced hints, so only dispatched when orders comfortably fits the
-    * broadcast budget. */
+    * Forced hints, so only dispatched when the (o_orderkey, o_custkey)
+    * build fits the broadcast rule. */
+  private val q3BcastCols = Seq(LongType, LongType)
   private[spark] val q3BcastBoth =
     """SELECT /*+ BROADCAST(o, c) */ l.l_orderkey AS o_orderkey,
       | CAST(CAST(CAST(sum(CAST(round(l.l_extendedprice * 100) AS BIGINT)
@@ -3574,21 +3636,11 @@ object Queries {
     // pre-agg / 0.93 s hinted SHJ / 0.76 s sorted merge).
     if (bucketMarker(dir, "lineitem").isDefined && bucketMarker(dir, "orders").isDefined)
       s.sql(q3FilterFirst)
-    else {
-      val (len, mtime) = dirFingerprint(s"$dir/orders.parquet")
-      val ordersBytes = ordersBytesCache.getOrElseUpdate((dir, len, mtime),
-        s.read.parquet(s"$dir/orders.parquet").queryExecution.optimizedPlan.stats.sizeInBytes)
-      // threshold <= 0 means broadcasts are disabled — the filter-first
-      // shape's key-set broadcast can't happen, so always pre-agg first
-      val abt = s.sessionState.conf.autoBroadcastJoinThreshold
-      val thresh = if (abt <= 0) 0L else math.max(abt, 10L * 1024 * 1024)
-      // both-dims broadcast while the FULL 2-col orders relation fits the
-      // budget; filter-first while the ~1/5 KEY SET does (2x slack for
-      // the in-memory hashed form); pre-agg-first beyond
-      if (thresh > 0 && ordersBytes <= BigInt(2L * thresh)) s.sql(q3BcastBoth)
-      else if (thresh > 0 && ordersBytes / 5 <= BigInt(2L * thresh)) s.sql(q3FilterFirst)
-      else s.sql(q3PreAggFirst)
-    }
+    // both-dims broadcast while the FULL 2-col orders build fits; filter-
+    // first while its ~1/5 o_orderkey KEY SET does; pre-agg-first beyond
+    else if (fitsBroadcast(s, dir, "orders", q3BcastCols)) s.sql(q3BcastBoth)
+    else if (fitsBroadcast(s, dir, "orders", Seq(LongType), rowShare = 0.2)) s.sql(q3FilterFirst)
+    else s.sql(q3PreAggFirst)
   }
   private val oTpchQ3 =
     """SELECT o.o_orderkey,
@@ -3612,7 +3664,7 @@ object Queries {
     * On FLAT storage the IN(DISTINCT) form wins: the explicit DISTINCT
     * adds a map-side partial dedup BEFORE the lineitem side shuffles, so
     * the semi-join's shuffled volume drops to unique-orderkey grain
-    * (tools/Q4Variants A/B: 2.97 -> 2.70 s at unbucketed sf10,
+    * (same-process A/B: 2.97 -> 2.70 s at unbucketed sf10,
     * 0.71 -> 0.60 s at sf0.1 vs bare EXISTS). On the CO-LOCATED bucketed
     * layout there is no shuffle to shrink — the distinct's two hash
     * aggregates are pure overhead AND destroy the buckets' sort order —
@@ -3643,11 +3695,12 @@ object Queries {
     * grain and the IN-DISTINCT form's separate distinct-aggregation
     * stage pair disappears (sf0.1 same-process A/B: 0.455 -> 0.325 s vs
     * IN-DISTINCT, 0.550 for the broadcast-keys semi form). Forced hint,
-    * so only dispatched while the whole orders relation comfortably
-    * clears the broadcast budget — the filtered side is what broadcasts,
-    * but the guard stays conservative on the unfiltered size. Same
+    * so only dispatched while the (o_orderkey, o_orderpriority) build fits
+    * the broadcast rule — the date-filtered side is what broadcasts, but
+    * the guard stays conservative on the unfiltered row count. Same
     * EXISTS semantics: o_orderkey is unique, and the inner GROUP BY
     * collapses per-order lineitem multiplicity. */
+  private val q4BcastCols = Seq(LongType, StringType)
   private val q4BcastOrders =
     """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n FROM (
       |  SELECT /*+ BROADCAST(o) */ o.o_orderkey, o.o_orderpriority
@@ -3662,15 +3715,7 @@ object Queries {
   private val qTpchQ4: Q = (s, dir) => {
     prep(s, dir)
     if (bucketMarker(dir, "lineitem").isDefined) s.sql(q4Exists)
-    else {
-      val (len, mtime) = dirFingerprint(s"$dir/orders.parquet")
-      val ordersBytes = ordersBytesCache.getOrElseUpdate((dir, len, mtime),
-        s.read.parquet(s"$dir/orders.parquet").queryExecution.optimizedPlan.stats.sizeInBytes)
-      val abt = s.sessionState.conf.autoBroadcastJoinThreshold
-      val thresh = if (abt <= 0) 0L else math.max(abt, 10L * 1024 * 1024)
-      s.sql(if (thresh > 0 && ordersBytes <= BigInt(2L * thresh)) q4BcastOrders
-            else q4InDistinct)
-    }
+    else s.sql(if (fitsBroadcast(s, dir, "orders", q4BcastCols)) q4BcastOrders else q4InDistinct)
   }
   private val oTpchQ4 =
     """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n
@@ -3706,7 +3751,8 @@ object Queries {
     * one of the two per-row timestamp conversions run once per ORDER on
     * the build side instead of once per LINEITEM row on the probe side,
     * and the broadcast payload is (long, bool, long). Forced hint, so
-    * dispatched only inside the same 2x broadcast budget as q3/q4. */
+    * dispatched only while that build fits the broadcast rule. */
+  private val q12NarrowCols = Seq(LongType, BooleanType, LongType)
   private[spark] val q12Narrow =
     """SELECT CASE WHEN high THEN 'high' ELSE 'low' END AS prio, n_late, n_items FROM (
       | SELECT /*+ BROADCAST(o) */ o.high,
@@ -3727,14 +3773,7 @@ object Queries {
     prep(s, dir)
     if (bucketMarker(dir, "lineitem").isDefined && bucketMarker(dir, "orders").isDefined)
       s.sql(q12Body)
-    else {
-      val (len, mtime) = dirFingerprint(s"$dir/orders.parquet")
-      val ordersBytes = ordersBytesCache.getOrElseUpdate((dir, len, mtime),
-        s.read.parquet(s"$dir/orders.parquet").queryExecution.optimizedPlan.stats.sizeInBytes)
-      val abt = s.sessionState.conf.autoBroadcastJoinThreshold
-      val thresh = if (abt <= 0) 0L else math.max(abt, 10L * 1024 * 1024)
-      s.sql(if (thresh > 0 && ordersBytes <= BigInt(2L * thresh)) q12Narrow else q12Body)
-    }
+    else s.sql(if (fitsBroadcast(s, dir, "orders", q12NarrowCols)) q12Narrow else q12Body)
   }
   private val oTpchQ12 =
     """SELECT CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
@@ -3745,39 +3784,6 @@ object Queries {
       |FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
       |GROUP BY 1 ORDER BY 1 LIMIT 1000""".stripMargin
 
-  private val q5SaltedSql =
-    """WITH p AS (
-      | SELECT r.r_name, n.n_name, pmod(l.l_orderkey, 1024) AS salt,
-      |  sum(CAST(round(l.l_extendedprice * 100) AS BIGINT)
-      |    * (100 - CAST(round(l.l_discount * 100) AS BIGINT))) AS rev_c,
-      |  count(*) AS n
-      | FROM lineitem l
-      | JOIN supplier s ON l.l_suppkey = s.s_suppkey
-      | JOIN nation n ON s.s_nationkey = n.n_nationkey
-      | JOIN region r ON n.n_regionkey = r.r_regionkey
-      | GROUP BY r.r_name, n.n_name, salt)
-      |SELECT r_name, n_name,
-      | CAST(CAST(sum(CAST(rev_c AS DECIMAL(38,0))) / 10000 AS DECIMAL(18,4)) AS DOUBLE) AS revenue,
-      | CAST(sum(n) AS BIGINT) AS n_items
-      |FROM p
-      |GROUP BY r_name, n_name
-      |ORDER BY r_name, n_name LIMIT 1000""".stripMargin
-  // single-level form: the salt exists only for BIGINT-cents headroom —
-  // a (r_name, n_name) group overflows 2^63 cents at ~10^10 lineitem
-  // rows per group (multi-TB per group), so below the size threshold the
-  // two-level shape is pure overhead (25600 partial groups + a second
-  // exchange + a second aggregate for 25 output rows)
-  private val q5FlatSql =
-    """SELECT r.r_name, n.n_name,
-      | CAST(CAST(CAST(sum(CAST(round(l.l_extendedprice * 100) AS BIGINT)
-      |    * (100 - CAST(round(l.l_discount * 100) AS BIGINT))) AS DECIMAL(38,0)) / 10000 AS DECIMAL(18,4)) AS DOUBLE) AS revenue,
-      | CAST(count(*) AS BIGINT) AS n_items
-      |FROM lineitem l
-      |JOIN supplier s ON l.l_suppkey = s.s_suppkey
-      |JOIN nation n ON s.s_nationkey = n.n_nationkey
-      |JOIN region r ON n.n_regionkey = r.r_regionkey
-      |GROUP BY r.r_name, n.n_name
-      |ORDER BY r.r_name, n.n_name LIMIT 1000""".stripMargin
   /** SUPPLIER-GRAIN PRE-AGG (r17): the best large-input q5 shape does NO
     * joins at all on the 60M-row pass — aggregate lineitem by l_suppkey
     * (one primitive-key agg, ~0.25 s of the sf10 stage), then walk the
@@ -3806,43 +3812,38 @@ object Queries {
       |JOIN region r ON n.n_regionkey = r.r_regionkey
       |GROUP BY r.r_name, n.n_name
       |ORDER BY r.r_name, n.n_name LIMIT 1000""".stripMargin
-  private val qTpchQ5Salted = sqlQ(q5SaltedSql)
-  private val qTpchQ5Flat = sqlQ(q5FlatSql)
   private val qTpchQ5Supp = sqlQ(q5SuppSql)
-  /** Forced-broadcast BRANCH rows (b_tpch_q3_bcast / b_tpch_q4_bcast) are
-    * correctness-gate pins, but a forced BROADCAST hint has no size guard
-    * of its own — run at a large SF it would risk driver OOM inside the
-    * gate (ADVICE r17). Wrap them in the SAME 2x-threshold budget the
-    * dispatcher uses: within budget the forced shape runs (what the row
-    * exists to pin, and always true at gate SFs); beyond it the row falls
-    * back to the unforced shape instead of failing — same oracle either
-    * way. */
-  private def guardedBcast(bcastSql: String, fallbackSql: String): Q = (s, dir) => {
-    prep(s, dir)
-    val (len, mtime) = dirFingerprint(s"$dir/orders.parquet")
-    val ordersBytes = ordersBytesCache.getOrElseUpdate((dir, len, mtime),
-      s.read.parquet(s"$dir/orders.parquet").queryExecution.optimizedPlan.stats.sizeInBytes)
-    val abt = s.sessionState.conf.autoBroadcastJoinThreshold
-    val thresh = if (abt <= 0) 0L else math.max(abt, 10L * 1024 * 1024)
-    s.sql(if (thresh > 0 && ordersBytes <= BigInt(2L * thresh)) bcastSql else fallbackSql)
-  }
+  /** Forced-broadcast BRANCH rows (b_tpch_q3_bcast / b_tpch_q4_bcast /
+    * b_tpch_q12_narrow) are correctness-gate pins, but a forced BROADCAST
+    * hint has no size guard of its own — run at a large SF it would risk
+    * an out-of-memory broadcast inside the gate (ADVICE r17). Wrap them in the SAME
+    * [[fitsBroadcast]] rule the dispatcher uses on the orders build `cols`:
+    * within it the forced shape runs (what the row exists to pin, and
+    * always true at gate SFs); beyond it the row falls back to the
+    * unforced shape instead of failing — same oracle either way. */
+  private def guardedBcast(bcastSql: String, fallbackSql: String, cols: Seq[DataType]): Q =
+    (s, dir) => {
+      prep(s, dir)
+      s.sql(if (fitsBroadcast(s, dir, "orders", cols)) bcastSql else fallbackSql)
+    }
 
   /** BUCKETED-LAYOUT GATE DIR (VERDICT r17 item 7): the q3/q4/q12/funnel
     * dispatchers key their shape off the `_graft_buckets.json` marker, but
     * until r18 the bucketed branch was exercised only by ScalaTest — never
     * by a driver CORRECTNESS row. This builds a bucketed+sorted IDENTITY
     * copy of the gate's sf dir (ScaleUp at copies=1: same rows, co-located
-    * layout, sorted marker) under the gitignored bigdata/, keyed by the
-    * source lineitem fingerprint so a regenerated source never reuses a
-    * stale copy. The *_bucketed rows below run the UNCHANGED dispatchers
-    * against it — same oracles, so the driver hash-verifies the bucketed
-    * plans end to end (CREATE TABLE … CLUSTERED/SORTED BY registration,
-    * outputOrdering/sortAgg confs, streaming-merge joins). */
+    * layout, sorted marker) under the gitignored bigdata/ of the working
+    * directory, keyed by the source lineitem files so a regenerated source
+    * never reuses a stale copy. The *_bucketed rows below run the
+    * UNCHANGED dispatchers against it — same oracles, so the oracle gate
+    * hash-verifies the bucketed plans end to end (CREATE TABLE …
+    * CLUSTERED/SORTED BY registration, outputOrdering/sortAgg confs,
+    * streaming-merge joins). */
   private def bucketedGateDir(s: SparkSession, dir: String): String = synchronized {
-    val (len, mtime) = dirFingerprint(s"$dir/lineitem.parquet")
+    val (_, len, mtime) = filesKey(dir, "lineitem", dataFiles(dir, "lineitem"))
     val tag = java.lang.Long.toHexString(
       scala.util.hashing.MurmurHash3.stringHash(s"$dir|$len|$mtime").toLong & 0xffffffffL)
-    val dst = s"/root/repo/bigdata/gate_bucketed_$tag"
+    val dst = new java.io.File(s"bigdata/gate_bucketed_$tag").getAbsolutePath
     if (!new java.io.File(s"$dst/lineitem.parquet/_graft_buckets.json").exists())
       graft.tools.ScaleUp.run(s, src = dir, dst = dst, copies = 1)
     dst
@@ -3877,45 +3878,17 @@ object Queries {
   /** q5 dispatcher (r18): supplier-grain pre-agg ALWAYS (exact via
     * per-supplier BIGINT cents — TPC-H suppliers scale with the data at a
     * fixed ~600 rows each, so the headroom is unbounded in corpus size);
-    * the broadcast-hinted dim nesting while supplier fits the same 2x
-    * budget the other dispatchers use (supplier is SF x 10K rows — at
-    * warehouse scale it outgrows any broadcast), the unhinted
-    * [[q5SuppSql]] beyond. Legacy shapes stay registered against the
-    * same oracle, so every branch remains driver-verified. */
+    * the broadcast-hinted dim nesting while its (sk, n_name, r_name) build
+    * fits the broadcast rule (supplier is SF x 10K rows — at warehouse
+    * scale it outgrows any broadcast), the unhinted [[q5SuppSql]] beyond.
+    * The r20 mid-size window that sent 48–200 MB of lineitem to the flat
+    * join-then-agg is gone: at sf1 (6M lineitem rows, bucketed) on a
+    * 4-core box the dispatched pre-agg read 0.50–0.65 s vs flat
+    * 0.89–1.01 s, six alternating 5-rep blocks in one process. */
+  private val q5DimCols = Seq(LongType, StringType, StringType)
   private val qTpchQ5: Q = (s, dir) => {
     prep(s, dir)
-    // MID-SIZE FLAT WINDOW (r20, VERDICT r19 item 5): three same-process
-    // A/Bs place the flat join-then-agg ahead of the supplier pre-agg
-    // ONLY in the ~sf1 neighborhood — sf0.1 small-profile 0.99 supp vs
-    // 1.33 flat, sf1 0.485 supp vs 0.407 flat (FloorLab dispatched:
-    // 0.876 vs ~0.73), sf3 0.846 supp vs 1.163 flat. The non-monotone
-    // crossover is a barrier-vs-volume tradeoff: at the small SF the
-    // 8-partition AQE-off profile makes the pre-agg's extra exchange
-    // nearly free while its 10x-narrower probe input wins; at mid size
-    // the bucket-file scan is only a handful of tasks, so the pre-agg's
-    // two real stage barriers cost more than flat's one-stage 3-broadcast
-    // probe; from sf3 up the probe volume dominates and pre-agg pays
-    // again. Window bounds sit between the measured points (sf0.1 11 MB,
-    // sf1 114 MB, sf3 339 MB); both branches share the oracle and stay
-    // driver-verified via b_tpch_q5_flat / b_tpch_q5_supp.
-    val liBytes = dirFingerprint(s"$dir/lineitem.parquet")._1
-    // ADVICE r20 (low): the window keys on on-disk bytes, which are codec-
-    // sensitive — log which branch dispatched so every A/B stays
-    // attributable to the branch that actually ran.
-    System.err.println(s"[q5] dispatch: lineitem ${liBytes >> 20} MB -> " +
-      (if (liBytes > 48L * 1024 * 1024 && liBytes <= 200L * 1024 * 1024) "flat"
-       else "supplier pre-agg"))
-    if (liBytes > 48L * 1024 * 1024 && liBytes <= 200L * 1024 * 1024)
-      s.sql(q5FlatSql)
-    else {
-      val (len, mtime) = dirFingerprint(s"$dir/supplier.parquet")
-      val suppBytes = ordersBytesCache.getOrElseUpdate((dir + "#supplier", len, mtime),
-        s.read.parquet(s"$dir/supplier.parquet").queryExecution.optimizedPlan.stats.sizeInBytes)
-      val abt = s.sessionState.conf.autoBroadcastJoinThreshold
-      val thresh = if (abt <= 0) 0L else math.max(abt, 10L * 1024 * 1024)
-      s.sql(if (thresh > 0 && suppBytes <= BigInt(2L * thresh)) q5SuppBcastSql
-            else q5SuppSql)
-    }
+    s.sql(if (fitsBroadcast(s, dir, "supplier", q5DimCols)) q5SuppBcastSql else q5SuppSql)
   }
   private val oTpchQ5 =
     """SELECT r.r_name, n.n_name,
@@ -3941,19 +3914,14 @@ object Queries {
   // the struct max IS "highest price, ties to the lowest orderkey") runs
   // as an ordinary hash aggregate: map-side partials collapse the ~10
   // orders per customer before the exchange and NOTHING ever sorts. The
-  // window form (kept below as b_top_order_window, same oracle) pays a
-  // full per-partition sort + window pass for the same one row per group.
+  // window form (the oracle's spelling) pays a full per-partition sort +
+  // window pass for the same one row per group (A/B 0.143 vs 0.287 s).
   // For k>1 the window/TopK forms remain the right tool; this shape is
   // the k=1 special case.
   private val qTopOrderPerCustomer = sqlQ(
     """SELECT o_custkey, -m.nk AS o_orderkey, m.p AS o_totalprice FROM (
       | SELECT o_custkey, max(named_struct('p', o_totalprice, 'nk', -o_orderkey)) AS m
       | FROM orders GROUP BY o_custkey)""".stripMargin)
-  private val qTopOrderWindow = sqlQ(
-    """SELECT o_custkey, o_orderkey, o_totalprice FROM (
-      | SELECT o_custkey, o_orderkey, o_totalprice,
-      |  row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS rn
-      | FROM orders) WHERE rn = 1""".stripMargin)
   private val oTopOrderPerCustomer =
     """SELECT o_custkey, o_orderkey, o_totalprice FROM (
       | SELECT o_custkey, o_orderkey, o_totalprice,
@@ -4016,52 +3984,6 @@ object Queries {
     * user_id (the same key), so AQE reuses the partitioning and the
     * heavy events relation is scanned once per referenced stage with the
     * event_type filter pushed to the scan. */
-  // SINGLE-WINDOW funnel (r15 variant): one shuffle on user_id, one sort,
-  // three stacked running-min window passes sharing that sort, one small
-  // aggregate. Stage carries are RUNNING MINS over the event-time order —
-  // v_run(t) = min view ts at-or-before t, so a click qualifies iff
-  // t > v_run(t) within the window (the global min view is visible at t
-  // exactly when it could qualify t), and likewise c_run for purchases:
-  // provably the same v/c/p per user as the staged min-join form (the
-  // DuckDB oracle BELOW keeps that staged formulation — the differential
-  // check). Unlike the r14 collect_list fold this holds O(1) state per
-  // user (UnboundedPreceding running aggregates stream; the sort spills),
-  // and unlike the r13 staged joins it scans events once and shuffles
-  // once — on bucketed events it is fully exchange-free. The fold
-  // survives as b_events_funnel_fold and the staged joins as
-  // b_events_funnel_staged, all oracle-checked against the same
-  // replay. The b_events_funnel ENTRY dispatches adaptively (see
-  // qEventsFunnel): staged on bucketed/large events (on the co-located
-  // layout the staged partial-min aggregates beat this window's full
-  // sort — sf10 A/B: 0.28 s staged vs 0.47 s window — and carry zero
-  // per-user state), fold on small flat files.
-  private val qEventsFunnelWindow = sqlQ(
-    """WITH w AS (
-      |  SELECT user_id, event_id, ts, event_type,
-      |    min(CASE WHEN event_type = 'view' THEN ts END)
-      |      OVER (PARTITION BY user_id ORDER BY ts, event_id
-      |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS v_run
-      |  FROM events WHERE event_type IN ('view', 'click', 'purchase')),
-      |w2 AS (
-      |  SELECT user_id, ts, event_type, v_run,
-      |    min(CASE WHEN event_type = 'click' AND ts > v_run
-      |          AND CAST(ts AS DOUBLE) - CAST(v_run AS DOUBLE) <= 86400 THEN ts END)
-      |      OVER (PARTITION BY user_id ORDER BY ts, event_id
-      |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS c_run
-      |  FROM w),
-      |u AS (
-      |  SELECT user_id,
-      |    max(CASE WHEN v_run IS NOT NULL THEN 1 ELSE 0 END) AS has_v,
-      |    max(CASE WHEN c_run IS NOT NULL THEN 1 ELSE 0 END) AS has_c,
-      |    max(CASE WHEN event_type = 'purchase' AND ts > c_run
-      |          AND CAST(ts AS DOUBLE) - CAST(c_run AS DOUBLE) <= 86400
-      |        THEN 1 ELSE 0 END) AS has_p
-      |  FROM w2 GROUP BY user_id)
-      |SELECT CAST(sum(has_v) AS BIGINT) AS n_view,
-      |       CAST(sum(has_c) AS BIGINT) AS n_click,
-      |       CAST(sum(has_p) AS BIGINT) AS n_purchase
-      |FROM u""".stripMargin)
-
   // Staged min-aggregate joins — the at-SCALE funnel shape (VERDICT r14
   // item 2): every stage keeps MAP-SIDE PARTIAL AGGREGATION — stage 1 is
   // a plain per-user min over the pushed-down 'view' scan; stages 2/3
@@ -4111,19 +4033,20 @@ object Queries {
     * item 3 — the same dispatch discipline as q4/q12/q3): on the
     * co-located bucketed events layout the staged partial-min joins are
     * exchange-free and beat every one-shuffle shape (r15 A/B at bucketed
-    * sf10: staged 0.28 s vs window 0.47 s); on small FLAT files the three
-    * tiny join stages are pure stage-launch floor — 3 stages' overhead on
-    * a sub-100 ms oracle — and the r14 single-scan array-fold wins (r14
-    * sf0.1: fold 0.162 s vs staged 0.344 s). Dispatch: bucketed marker →
-    * staged; flat and small (< [[FunnelFoldMaxBytes]] of events parquet)
-    * → fold; flat and LARGE → staged (the fold's per-user collect_list
-    * buffer is unbounded in the hot-user dimension, never the 100-TB
-    * pick). All three shapes share one oracle — the differential check. */
-  private val FunnelFoldMaxBytes = 64L * 1024 * 1024
+    * sf10: staged 0.28 s vs a single-window running-min form 0.47 s); on
+    * small FLAT files the three tiny join stages are pure stage-launch
+    * floor — 3 stages' overhead on a sub-100 ms oracle — and the r14
+    * single-scan array-fold wins (r14 sf0.1: fold 0.162 s vs staged
+    * 0.344 s). Dispatch: bucketed marker → staged; flat and at most
+    * [[FunnelFoldMaxRows]] events → fold; flat and LARGER → staged (the
+    * fold's per-user collect_list buffer is unbounded in the hot-user
+    * dimension, never the 100-TB pick). Both shapes share one oracle —
+    * the differential check. */
+  private val FunnelFoldMaxRows = 3300000L
   private val qEventsFunnel: Q = (s, dir) => {
     prep(s, dir)
     val staged = bucketMarker(dir, "events").isDefined ||
-      dirFingerprint(s"$dir/events.parquet")._1 > FunnelFoldMaxBytes
+      footerRows(dir, "events") > FunnelFoldMaxRows
     s.sql(if (staged) funnelStagedSql else funnelFoldSql)
   }
   private val qEventsFunnelStaged = sqlQ(funnelStagedSql)
@@ -4175,11 +4098,11 @@ object Queries {
       |      FROM (SELECT /*+ COALESCE(1) */ event_type, ts, user_id FROM events)
       |      GROUP BY 1, 2, 3)
       |GROUP BY event_type, hour_epoch""".stripMargin
-  private val HourlyOneMaxBytes = 16L * 1024 * 1024
+  private val HourlyOneMaxRows = 800000L
   private val qEventsHourly: Q = (s, dir) => {
     prep(s, dir)
     val one = bucketMarker(dir, "events").isEmpty &&
-      dirFingerprint(s"$dir/events.parquet")._1 < HourlyOneMaxBytes
+      footerRows(dir, "events") < HourlyOneMaxRows
     s.sql(if (one) hourlyOneSql else hourlyTwoLevelSql)
   }
   private val qEventsHourlyWide = sqlQ(hourlyTwoLevelSql)
@@ -4404,12 +4327,12 @@ object Queries {
     ("b_tpch_q1", qTpchQ1, Some(oTpchQ1)),
     // non-default q1/q12 dispatch branches stay driver-verified (r18)
     ("b_tpch_q1_salted", sqlQ(q1SaltedSql), Some(oTpchQ1)),
-    ("b_tpch_q12_narrow", guardedBcast(q12Narrow, q12Body), Some(oTpchQ12)),
+    ("b_tpch_q12_narrow", guardedBcast(q12Narrow, q12Body, q12NarrowCols), Some(oTpchQ12)),
     ("b_tpch_q6", qTpchQ6, Some(oTpchQ6)),
     ("b_tpch_q3", qTpchQ3, Some(oTpchQ3)),
     // every q3 dispatch branch stays driver-verified at the gate's SF
     // (the dispatcher itself only ever takes one branch per layout)
-    ("b_tpch_q3_bcast", guardedBcast(q3BcastBoth, q3FilterFirst), Some(oTpchQ3)),
+    ("b_tpch_q3_bcast", guardedBcast(q3BcastBoth, q3FilterFirst, q3BcastCols), Some(oTpchQ3)),
     ("b_tpch_q3_ff", sqlQ(q3FilterFirst), Some(oTpchQ3)),
     ("b_tpch_q3_preagg", sqlQ(q3PreAggFirst), Some(oTpchQ3)),
     // the BUCKETED dispatch branches, driver-verified against the same
@@ -4425,23 +4348,19 @@ object Queries {
       qEventsFunnel(s, bucketedGateDir(s, dir)), Some(oEventsFunnel)),
     ("b_tpch_q4", qTpchQ4, Some(oTpchQ4)),
     // non-default q4 branches stay driver-verified (same oracle)
-    ("b_tpch_q4_bcast", guardedBcast(q4BcastOrders, q4InDistinct), Some(oTpchQ4)),
+    ("b_tpch_q4_bcast", guardedBcast(q4BcastOrders, q4InDistinct, q4BcastCols), Some(oTpchQ4)),
     ("b_tpch_q4_exists", sqlQ(q4Exists), Some(oTpchQ4)),
     ("b_tpch_q4_indistinct", sqlQ(q4InDistinct), Some(oTpchQ4)),
     ("b_tpch_q5", qTpchQ5, Some(oTpchQ5)),
-    ("b_tpch_q5_salted", qTpchQ5Salted, Some(oTpchQ5)),
-    ("b_tpch_q5_flat", qTpchQ5Flat, Some(oTpchQ5)),
     ("b_tpch_q5_supp", qTpchQ5Supp, Some(oTpchQ5)),
     ("b_tpch_q12", qTpchQ12, Some(oTpchQ12)),
     ("b_top_order", qTopOrderPerCustomer, Some(oTopOrderPerCustomer)),
-    ("b_top_order_window", qTopOrderWindow, Some(oTopOrderPerCustomer)),
     ("b_top_order_agg", qTopOrderAgg, Some(oTopOrderPerCustomer)),
     ("b_events_hourly", qEventsHourly, Some(oEventsHourly)),
     ("b_events_hourly_wide", qEventsHourlyWide, Some(oEventsHourly)),
     ("b_events_json", qEventsJson, Some(oEventsJson)),
     ("b_events_funnel", qEventsFunnel, Some(oEventsFunnel)),
     ("b_events_funnel_staged", qEventsFunnelStaged, Some(oEventsFunnel)),
-    ("b_events_funnel_window", qEventsFunnelWindow, Some(oEventsFunnel)),
     ("b_events_funnel_fold", qEventsFunnelFold, Some(oEventsFunnel)),
     ("b_events_sessions", qEventsSessions, Some(oEventsSessions)),
     ("b_events_asof", qEventsAsof, Some(oEventsAsof)),

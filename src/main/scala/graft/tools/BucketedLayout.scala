@@ -23,8 +23,9 @@ object BucketedLayout {
   def main(args: Array[String]): Unit = {
     val dst = args.headOption.getOrElse("/tmp/graft_bktest")
     val copies = args.lift(1).map(_.toInt).getOrElse(2)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
+    val cores = Runtime.getRuntime.availableProcessors
+    val spark = SparkSession.builder().master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores)
       .config("spark.sql.extensions", "graft.spark.GraftExtensions")
       .config("spark.sql.files.maxPartitionBytes", 32L * 1024 * 1024)
       .config("spark.ui.enabled", false)

@@ -13,15 +13,18 @@ import graft.spark.Queries
   * before it costs a round.
   *
   * Usage: runMain graft.tools.FloorLab <query names...>
+  * A name may repeat: `q a q a` times q and a in alternating blocks.
   * Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-  *      SPARK_GRAFT_REPS (default 5), SPARK_GRAFT_CONF (k=v;k=v),
+  *      SPARK_GRAFT_REPS (default 5; 0 prints each query's rows instead
+  *      of timing it), SPARK_GRAFT_CONF (k=v;k=v),
   *      SPARK_GRAFT_PLAN=1 to dump full executed plans,
   *      SPARK_GRAFT_NOWARM=1 to skip the sf0.001 warmup passes.
   */
 object FloorLab {
   def main(args: Array[String]): Unit = {
-    val builder = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
+    val cores = Runtime.getRuntime.availableProcessors
+    val builder = SparkSession.builder().master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores)
       .config("spark.sql.files.maxPartitionBytes", 32L * 1024 * 1024)
       .config("spark.sql.files.openCostInBytes", 1L * 1024 * 1024)
       .config("spark.sql.codegen.cache.maxEntries", "10000")
@@ -65,7 +68,11 @@ object FloorLab {
           jobs.incrementAndGet(); stages.addAndGet(j.stageInfos.size)
         }
       })
-    for (name <- names; ab <- if (abConf.isEmpty) Seq(false) else Seq(false, true)) {
+    if (reps == 0) names.foreach { n =>
+      println(s"===== $n")
+      byName(n)(spark, dir).show(200, truncate = false)
+    }
+    for (name <- names if reps > 0; ab <- if (abConf.isEmpty) Seq(false) else Seq(false, true)) {
       if (ab) abConf.foreach { case (k, v) => spark.conf.set(k, v) }
       val tag = if (ab) s"$name[AB]" else name
       var best = Double.MaxValue

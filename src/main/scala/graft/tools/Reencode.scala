@@ -20,8 +20,9 @@ object Reencode {
     // in-place would read-overwrite the very table being read (ADVICE r19)
     require(new java.io.File(src).getCanonicalPath != new java.io.File(dst).getCanonicalPath,
       s"reencode: dst must differ from src (got '$src' -> '$dst')")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
+    val cores = Runtime.getRuntime.availableProcessors
+    val spark = SparkSession.builder().master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores)
       .config("spark.ui.enabled", false)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.compression.codec", codec)
@@ -57,7 +58,7 @@ object Reencode {
         df.repartition(n, col(key))
           .write.mode("overwrite")
           .bucketBy(n, key).sortBy(key)
-          .option("path", path)
+          .option("path", graft.spark.Queries.qualifiedPath(spark, path))
           .option("compression", codec)
           .saveAsTable(tbl)
         val pw = new java.io.PrintWriter(s"$path/_graft_buckets.json")

@@ -14,16 +14,18 @@ import org.apache.spark.sql.functions._
  * which is a different regime than "10x more data".
  *
  * Usage: runMain graft.tools.ScaleUp [srcDir] [dstDir] [copies]
- * Defaults: /root/testdata/sf0.1 -> /root/repo/bigdata/sf1 x 10.
+ * Defaults: the sf0.1 test data -> bigdata/sf1 (under the working
+ * directory) x 10.
  */
 object ScaleUp {
   def main(args: Array[String]): Unit = {
     val src = args.lift(0).getOrElse("/root/testdata/sf0.1")
-    val dst = args.lift(1).getOrElse("/root/repo/bigdata/sf1")
+    val dst = args.lift(1).getOrElse("bigdata/sf1")
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
@@ -36,7 +38,7 @@ object ScaleUp {
     * when it is missing — bigdata/ is gitignored and does not survive
     * between rounds). */
   def run(spark: SparkSession, src: String = "/root/testdata/sf0.1",
-          dst: String = "/root/repo/bigdata/sf1", copies: Int = 10): Unit = {
+          dst: String = "bigdata/sf1", copies: Int = 10): Unit = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     def keyMax(df: DataFrame, c: String): Long =
@@ -64,10 +66,10 @@ object ScaleUp {
       * the storage layout directly — zero join/window-feeding exchanges,
       * the same recipe the reference documents for partition-by-cell
       * (docs/function-reference.md:750-768) applied to relational keys.
-      * tools/Q4Q12Bucketed measured the effect at sf10: q4 1.87->1.26 s,
-      * q12 3.38->2.40 s, join exchanges -> 0. At 100 TB this is not an
-      * optimization but the design: co-locating fact tables on the join
-      * key at write time is what makes the join cost linear-per-node.
+      * Measured at sf10: q4 1.87->1.26 s, q12 3.38->2.40 s, join
+      * exchanges -> 0. At 100 TB this is not an optimization but the
+      * design: co-locating fact tables on the join key at write time is
+      * what makes the join cost linear-per-node.
       *
       * Mechanics: repartition(n, key) aligns write tasks with bucket ids
       * (same murmur3 pmod both sides), so each bucket is EXACTLY ONE
@@ -95,7 +97,7 @@ object ScaleUp {
       df.repartition(n, col(key))
         .write.mode("overwrite")
         .bucketBy(n, key).sortBy(key)
-        .option("path", path)
+        .option("path", graft.spark.Queries.qualifiedPath(spark, path))
         .saveAsTable(tbl)
       // sorted:true is the sortBy path's signature (ADVICE r17): readers
       // only claim SORTED BY — and only enable sort-consuming plan rules —

@@ -20,8 +20,9 @@ object ScanBench {
     val extraConf = sys.env.get("SPARK_GRAFT_CONF").toSeq
       .flatMap(_.split(";")).map(_.trim).filter(_.contains("="))
       .map { kv => val i = kv.indexOf('='); (kv.take(i), kv.drop(i + 1)) }
-    val builder = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
+    val cores = Runtime.getRuntime.availableProcessors
+    val builder = SparkSession.builder().master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores)
       .config("spark.ui.enabled", false)
     extraConf.foreach { case (k, v) => builder.config(k, v) }
     val spark = builder.getOrCreate()

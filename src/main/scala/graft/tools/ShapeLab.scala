@@ -6,8 +6,15 @@ import graft.spark.Queries
 
 /** r17 shape lab: A/B candidate physical shapes for the scale-section
   * floor queries (q3/q4/q5/q1/q12) on a bigdata dir, with the Bench
-  * session profile. Each variant is named; pass names as args (default:
-  * all). Prints min-of-3 warm reps + exchange/sort counts per variant. */
+  * session profile. Each variant is named; pass name prefixes as args
+  * (default: all). An argument containing whitespace is raw SQL over the
+  * dir's tables and runs as variant `sqlN`. Prints min-of-N warm reps +
+  * exchange/sort counts per variant.
+  *
+  * Usage: runMain graft.tools.ShapeLab [<name prefix> | "<sql>"]...
+  * Env: SPARK_GRAFT_SF_DIR (default bigdata/sf10), SPARK_GRAFT_REPS
+  *      (default 5), SPARK_GRAFT_CONF (k=v;k=v), SPARK_GRAFT_PLAN=1 to
+  *      print the final plans. */
 object ShapeLab {
 
   private val centsSum =
@@ -570,8 +577,9 @@ object ShapeLab {
   )
 
   def main(args: Array[String]): Unit = {
-    val builder = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
+    val cores = Runtime.getRuntime.availableProcessors
+    val builder = SparkSession.builder().master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores)
       .config("spark.sql.files.maxPartitionBytes", 32L * 1024 * 1024)
       .config("spark.sql.files.openCostInBytes", 1L * 1024 * 1024)
       .config("spark.sql.parquet.columnarReaderBatchSize", "16384")
@@ -583,9 +591,12 @@ object ShapeLab {
       .foreach { kv => val i = kv.indexOf('='); builder.config(kv.take(i), kv.drop(i + 1)) }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/repo/bigdata/sf10")
+    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "bigdata/sf10")
     Queries.prep(spark, dir)
-    val picked = if (args.isEmpty) variants else variants.filter(v => args.exists(v._1.startsWith))
+    val (sqls, prefixes) = args.toSeq.partition(_.exists(_.isWhitespace))
+    val picked =
+      (if (args.isEmpty) variants else variants.filter(v => prefixes.exists(v._1.startsWith))) ++
+        sqls.zipWithIndex.map { case (q, i) => s"sql$i" -> q }
     val reps = sys.env.get("SPARK_GRAFT_REPS").map(_.toInt).getOrElse(5)
     for ((name, sql) <- picked) {
       var best = Double.MaxValue

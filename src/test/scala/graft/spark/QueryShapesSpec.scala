@@ -4,9 +4,11 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The size-adaptive q3 picks between two SQL shapes; the driver's
-  * oracle gate only ever exercises the small-data (filter-first) branch,
-  * so the pre-agg-first branch needs its own equivalence guard. */
+/** Every relational dispatcher (q1, q3, q4, q5, q12, funnel, hourly)
+  * picks one SQL shape per input size or layout, so the oracle gate
+  * sees only the branch its SF dispatches. Each test pins the branch
+  * a small flat dir takes and asserts every other registered shape of the
+  * same query bag-equal to the dispatched row. */
 class QueryShapesSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var spark: SparkSession = _
 
@@ -31,20 +33,20 @@ class QueryShapesSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private lazy val qmap = Queries.all.map { case (n, q, _) => n -> q }.toMap
 
-  test("q5 dispatcher: flat and salted shapes return identical rows; small flat dir takes the single-level plan") {
+  test("q5 dispatcher: small dir takes the broadcast-dim supplier pre-agg; the unhinted pre-agg agrees") {
     val dir = "/root/testdata/sf0.001"
     Queries.prep(spark, dir)
-    val flat = qmap("b_tpch_q5_flat")(spark, dir).collect().map(_.toSeq).toSeq
-    val salted = qmap("b_tpch_q5_salted")(spark, dir).collect().map(_.toSeq).toSeq
-    val supp = qmap("b_tpch_q5_supp")(spark, dir).collect().map(_.toSeq).toSeq
     val dispatched = qmap("b_tpch_q5")(spark, dir)
-    assert(flat.nonEmpty && flat === salted)
-    assert(flat === supp, "supplier-grain pre-agg shape must agree with the join-then-agg shapes")
-    assert(dispatched.collect().map(_.toSeq).toSeq === flat)
-    // a tiny flat dir is far below the 512 MB salt threshold: the
-    // dispatched plan must be the single-level one (no salt column)
-    assert(!dispatched.queryExecution.optimizedPlan.toString.contains("salt"),
-      "small input must take the single-level q5 shape")
+    // the forced BROADCAST(d) hint survives into the optimized join
+    assert(dispatched.queryExecution.optimizedPlan.toString.contains("strategy=broadcast"),
+      "a 10-row supplier table must take the broadcast-hinted dim shape")
+    val supp = qmap("b_tpch_q5_supp")(spark, dir)
+    assert(!supp.queryExecution.optimizedPlan.toString.contains("strategy=broadcast"),
+      "the unhinted pre-agg carries no hint, so the plan check above discriminates")
+    val want = dispatched.collect().map(_.toSeq).toSeq
+    assert(want.nonEmpty)
+    assert(supp.collect().map(_.toSeq).toSeq === want,
+      "unhinted supplier pre-agg must agree with the dispatched q5")
   }
 
   test("q3 dispatcher: small flat dir takes the both-dims-broadcast shape; all branches agree") {
@@ -149,8 +151,26 @@ class QueryShapesSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(dispatched.queryExecution.optimizedPlan.toString.contains("collect_list"),
       "a small flat events table must dispatch to the array-fold shape")
     val f = dispatched.collect().map(_.toSeq).toSeq
-    for (v <- Seq("b_events_funnel_staged", "b_events_funnel_window", "b_events_funnel_fold"))
+    for (v <- Seq("b_events_funnel_staged", "b_events_funnel_fold"))
       assert(qmap(v)(spark, dir).collect().map(_.toSeq).toSeq === f,
         s"$v must agree with the dispatched funnel")
+  }
+
+  test("hourly dispatcher: small flat dir takes the exchange-free one-stage rollup; two-level agrees") {
+    val dir = "/root/testdata/sf0.001"
+    Queries.prep(spark, dir)
+    def bag(rows: Array[org.apache.spark.sql.Row]) =
+      rows.map(_.toSeq).groupBy(identity).view.mapValues(_.length).toMap
+    val dispatched = qmap("b_events_hourly")(spark, dir)
+    val got = dispatched.collect()
+    val plan = dispatched.queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange"),
+      s"small flat hourly must run as one COALESCE(1) stage with no exchange:\n$plan")
+    val wide = qmap("b_events_hourly_wide")(spark, dir)
+    val want = wide.collect()
+    assert(wide.queryExecution.executedPlan.toString.contains("Exchange"),
+      "the two-level rollup shuffles, so the plan check above discriminates")
+    assert(got.nonEmpty)
+    assert(bag(got) === bag(want), "two-level hourly must be bag-equal to the dispatched hourly")
   }
 }
